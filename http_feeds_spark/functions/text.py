@@ -302,12 +302,6 @@ def tokenize_query(terms, analyzer: str = "standard") -> list[str]:
     return out
 
 
-def token_count(col) -> Column:
-    """BPE-ish regex token count (SURVEY §2 D5)."""
-    col = F.col(col) if isinstance(col, str) else col
-    return F.size(F.regexp_extract_all(F.lower(col), F.lit(TOKEN_RE), F.lit(0)))
-
-
 def word_shingles(tokens: Column, n: int = 3) -> Column:
     """Word n-gram shingles as strings; empty array when len < n."""
     idx = F.sequence(F.lit(0), F.greatest(F.size(tokens) - n, F.lit(-1)))

@@ -526,27 +526,6 @@ def purge_erased(spark: SparkSession, index_root: str) -> int:
     return removed
 
 
-def update_vectors_in_place(
-    spark: SparkSession,
-    new_vectors: DataFrame,
-    index_root: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
-    """Replace existing ids' codes in place — the compressed-tier twin
-    of ann_index.update_vectors (erase → purge → re-encode against the
-    frozen model); same crash story. Returns {"removed_rows",
-    "vectors_indexed"}."""
-    ids = new_vectors.select(F.col(id_col).cast("long").alias("id")).distinct()
-    erasure.erase_ids(spark, index_root, ids)
-    removed = purge_erased(spark, index_root)
-    added = upsert_vectors(
-        spark, new_vectors, index_root, id_col=id_col, vec_col=vec_col
-    )
-    return {"removed_rows": int(removed), "vectors_indexed": int(added)}
-
-
 def search_rerank(
     spark: SparkSession,
     queries: DataFrame,

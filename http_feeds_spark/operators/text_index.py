@@ -62,6 +62,8 @@ POSTINGS_DIR = "postings"
 TERMS_DIR = "terms"
 META_DIR = "meta"
 COMPACTION_DIR = "compaction"
+# at most session.MAX_DIR_FANOUT: a batch dir's bucket listing then runs
+# on the driver, not as a Spark job per batch
 N_BUCKETS = 64
 
 
@@ -113,13 +115,15 @@ def _manifests(spark: SparkSession, index_root: str) -> list[tuple[int, int, lis
     # job audit): the previous per-generation collect scheduled one job
     # per manifest, making every frontier listing O(generations)
     # scheduled jobs on a long-lived store. The generation comes back
-    # from the file path, so one read answers all of them.
+    # from the name of the directory holding each file (never from an
+    # earlier path segment: the index root may itself sit under a
+    # ``compaction/<n>/`` path), so one read answers all of them.
     rows = (
         spark.read.parquet(*[f"{root}/{g:06d}" for g in sorted(gens)])
         .select(
-            F.regexp_extract(
-                F.input_file_name(), f"/{COMPACTION_DIR}/(\\d+)/", 1
-            ).cast("int").alias("gen"),
+            F.element_at(F.split(F.input_file_name(), "/"), -2)
+            .cast("int")
+            .alias("gen"),
             "new_batch",
             "sources",
         )

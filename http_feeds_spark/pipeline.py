@@ -27,6 +27,9 @@ movement, and running it twice yields byte-identical corpora
 
 from __future__ import annotations
 
+import uuid
+from concurrent.futures import Future, ThreadPoolExecutor, wait
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -145,6 +148,31 @@ def _decontaminate_against(
     return corpus.join(contaminated, "doc_id", "left_anti")
 
 
+def _abandon_eval_side(spark: SparkSession, future: Future, tag: str) -> None:
+    """Failure path of the overlapped eval-fingerprint thread: cancel its
+    Spark jobs, join the thread, and release the local checkpoint it may
+    have materialized, so a failed pipeline leaves no job running and no
+    blocks pinned until the session ends."""
+    future.cancel()  # never started: it never will
+    spark.sparkContext.cancelJobsWithTag(tag)
+    wait([future])
+    if not future.cancelled() and future.exception() is None:
+        # checkpoint blocks belong to the checkpointed RDD, not the cache
+        future.result()._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def _observed_rows(obs, df: DataFrame) -> int:
+    """The row count ``obs`` observed on ``df``. When an upstream stage
+    comes out empty (a length gate that removes every document), AQE
+    replaces the plan above it with an empty relation, the observed node
+    drops out of the executed plan, and the observation fires with no
+    metrics; the stage is then counted directly, which only happens on
+    that degenerate path."""
+    if obs._jo.getRow().length() == 0:
+        return df.count()
+    return int(obs.get["rows"])
+
+
 def prepare_training_corpus(
     spark: SparkSession,
     docs: DataFrame,
@@ -205,7 +233,8 @@ def prepare_training_corpus(
     from pyspark.storagelevel import StorageLevel
 
     split_weights = dict(split_weights or DEFAULT_SPLIT)
-    # value = int (already known) | Observation (resolves at the end)
+    # value = int (already known) | (Observation, observed frame): the
+    # observation resolves at the end, the frame is its fallback count
     report: list[tuple[str, object]] = []
     pinned: list[DataFrame] = []
 
@@ -214,7 +243,7 @@ def prepare_training_corpus(
         df = df.observe(obs, F.count(F.lit(1)).alias("rows")).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        report.append((stage, obs))
+        report.append((stage, (obs, df)))
         pinned.append(df)
         return df
 
@@ -240,7 +269,7 @@ def prepare_training_corpus(
         ),
         "quality",
     )
-    report.insert(0, ("input", obs_in))
+    report.insert(0, ("input", (obs_in, docs)))
 
     if zlib_ratio_bounds is not None:
         # entropy gate (functions/text.compression_ratio, r10): both
@@ -325,18 +354,19 @@ def prepare_training_corpus(
             # run, instead of serializing after them. Rows are identical
             # to the inline form (deterministic per-row expressions);
             # only the schedule changes.
-            from concurrent.futures import ThreadPoolExecutor
-
             from pyspark import inheritable_thread_target
 
+            eval_tag = f"pipeline-eval-fps-{uuid.uuid4().hex}"
+
             def _eval_side() -> DataFrame:
-                spark.sparkContext.setJobDescription(
-                    "decontaminate: eval fingerprints (overlapped)"
-                )
+                sc = spark.sparkContext
+                sc.setJobDescription("decontaminate: eval fingerprints (overlapped)")
+                sc.addJobTag(eval_tag)
                 try:
                     return _eval_fp_rows(eval_docs).localCheckpoint()
                 finally:
-                    spark.sparkContext.setJobDescription(None)
+                    sc.removeJobTag(eval_tag)
+                    sc.setJobDescription(None)
 
             _eval_pool = ThreadPoolExecutor(max_workers=1)
             eval_fps_future = _eval_pool.submit(
@@ -344,29 +374,35 @@ def prepare_training_corpus(
             )
             _eval_pool.shutdown(wait=False)
 
-        toks = tokenized(cur.select("doc_id", "text"))
-        _settled()  # the token checkpoint consumed cur's chain
-        pairs = _near_dup_pairs(cur.select("doc_id", "text"), tokens=toks)
-        losers = (
-            connected_components(pairs, src="a", dst="b")
-            .where(F.col("node") != F.col("component"))
-            .select(F.col("node").alias("doc_id"))
-        )
-        cur = _boundary(cur.join(losers, "doc_id", "left_anti"), "near_dedup")
-        if eval_docs is not None:
-            corpus_tokens = toks.join(losers, "doc_id", "left_anti")
+    try:
+        if near_dup:
+            toks = tokenized(cur.select("doc_id", "text"))
+            _settled()  # the token checkpoint consumed cur's chain
+            pairs = _near_dup_pairs(cur.select("doc_id", "text"), tokens=toks)
+            losers = (
+                connected_components(pairs, src="a", dst="b")
+                .where(F.col("node") != F.col("component"))
+                .select(F.col("node").alias("doc_id"))
+            )
+            cur = _boundary(cur.join(losers, "doc_id", "left_anti"), "near_dedup")
+            if eval_docs is not None:
+                corpus_tokens = toks.join(losers, "doc_id", "left_anti")
 
-    if eval_docs is not None:
-        dec = _decontaminate_against(
-            cur,
-            eval_docs,
-            min_shared_fps,
-            corpus_tokens=corpus_tokens,
-            eval_fps=eval_fps_future.result() if eval_fps_future else None,
-        )
-        if corpus_tokens is None:
-            _settled()  # the fingerprint checkpoint consumed cur's chain
-        cur = _boundary(dec, "decontaminate")
+        if eval_docs is not None:
+            dec = _decontaminate_against(
+                cur,
+                eval_docs,
+                min_shared_fps,
+                corpus_tokens=corpus_tokens,
+                eval_fps=eval_fps_future.result() if eval_fps_future else None,
+            )
+            if corpus_tokens is None:
+                _settled()  # the fingerprint checkpoint consumed cur's chain
+            cur = _boundary(dec, "decontaminate")
+    except BaseException:
+        if eval_fps_future is not None:
+            _abandon_eval_side(spark, eval_fps_future, eval_tag)
+        raise
 
     if mixture:
         mixed = smp.resample_to_mixture(cur, mixture, seed=seed)
@@ -388,7 +424,7 @@ def prepare_training_corpus(
         seed=seed,
     )
     _settled()  # pack's eager passes consumed the whole chain
-    report.append(("train", obs_train))
+    report.append(("train", (obs_train, train)))
 
     out = {"corpus": corpus, "train_packed": train_packed}
     if shard_root is not None:
@@ -407,7 +443,7 @@ def prepare_training_corpus(
     # done, and the returned frames stay the usual lazy DAG: a caller
     # consuming them recomputes the pipeline once, exactly as before
     out["report"] = [
-        (stage, v if isinstance(v, int) else int(v.get["rows"]))
+        (stage, v if isinstance(v, int) else _observed_rows(*v))
         for stage, v in report
     ]
     while pinned:

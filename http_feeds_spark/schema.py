@@ -68,10 +68,6 @@ def register_payload_schema(event_type: str, schema: T.StructType) -> None:
     _PAYLOAD_SCHEMAS[event_type] = schema
 
 
-def payload_schema_for(event_type: str) -> T.StructType | None:
-    return _PAYLOAD_SCHEMAS.get(event_type)
-
-
 def registered_payload_types() -> list[str]:
     return sorted(_PAYLOAD_SCHEMAS)
 

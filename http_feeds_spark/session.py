@@ -11,6 +11,18 @@ Key posture for 100 TB:
 - Arrow transfers on (every Pandas-UDF path is Arrow-batched).
 - shuffle partitions sized to cores locally; on a real cluster this is
   overridden per-job from input bytes (AQE coalesces the excess).
+- store listing on the driver. The hash-bucketed stores (text index,
+  dedup index, media store) write up to ``MAX_DIR_FANOUT`` ``bucket=N``
+  directories per batch. Spark lists a directory with more children
+  than ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32 by
+  default) through a Spark job, which would make every store read
+  schedule one "Listing leaf files" job per batch directory. The
+  threshold is set to the fan-out, so these listings run on the driver
+  (milliseconds on local/HDFS). ``s3a`` roots keep Spark's flat
+  ``listFiles`` call (``spark.sql.sources.useListFilesFileSystemList``),
+  so object stores do not fall back to one call per directory. A wider
+  fan-out (a corpus-sized ANN ``nlist``) still lists through a job,
+  which pays off at that width.
 """
 
 from __future__ import annotations
@@ -20,6 +32,11 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# Widest directory fan-out the engine writes (the stores' N_BUCKETS and
+# the feed-bootstrapped ANN/PQ nlist default are pinned at or below it
+# in tests): listings up to this many children run on the driver.
+MAX_DIR_FANOUT = 64
 
 
 def get_spark(
@@ -76,6 +93,10 @@ def get_spark(
         # python streaming sources + many short-lived UDF stages: give the
         # worker fork/connect-back path headroom under load (default 15s)
         .config("spark.python.authenticate.socketTimeout", "120s")
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(MAX_DIR_FANOUT),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

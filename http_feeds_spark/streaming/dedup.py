@@ -55,7 +55,8 @@ ASSIGNMENT_DIR = "assignment"
 ANALYZER_DIR = "analyzer"
 # bands/shingles are bucketed by doc-id hash so a physical erasure purge
 # rewrites only the buckets holding erased docs (erasure.py tier 2),
-# never the whole append-only store
+# never the whole append-only store; at most session.MAX_DIR_FANOUT, so
+# every store read lists its bucket dirs on the driver
 N_BUCKETS = 64
 
 # constants matching q_llm_dedup_near (queries/llm.py)

@@ -70,7 +70,8 @@ PHASH_DIR = "phash"
 AUDIOFP_DIR = "audiofp"
 VIDEOFP_DIR = "videofp"
 # doc-id-hash buckets: the erasure purge's partition locality (the
-# streaming/dedup.py convention and constant)
+# streaming/dedup.py convention and constant; at most
+# session.MAX_DIR_FANOUT, so reads list on the driver)
 N_BUCKETS = 64
 
 

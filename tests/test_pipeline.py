@@ -5,6 +5,9 @@ split honors the budget bound."""
 
 from __future__ import annotations
 
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
 from http_feeds_spark.pipeline import prepare_training_corpus
@@ -319,3 +322,61 @@ def test_entropy_stage_drops_both_tails(spark, sf_dir):
     # default: no entropy stage anywhere in the report
     base = prepare_training_corpus(spark, corpus, near_dup=False)
     assert "entropy" not in dict(base["report"])
+
+
+def test_length_gate_removing_every_doc_returns_empty(spark):
+    """Every document is longer than ``max_chars``: the pipeline returns
+    empty frames and a report of zero counts after the input stage,
+    instead of failing on an observation that never collected a row."""
+    text = " ".join(f"word{i}" for i in range(400))  # > 2000 chars
+    docs = spark.createDataFrame(
+        [(i, f"{text} x{i}", "en", "src", len(text)) for i in range(20)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    eval_docs = spark.createDataFrame(
+        [(1, "an evaluation document of a few words")], "doc_id long, text string"
+    )
+    result = prepare_training_corpus(spark, docs, max_chars=2000, eval_docs=eval_docs)
+    assert result["corpus"].count() == 0
+    assert result["train_packed"].count() == 0
+    assert result["report"] == [
+        ("input", 20), ("quality", 0), ("exact_dedup", 0),
+        ("near_dedup", 0), ("decontaminate", 0), ("train", 0),
+    ]
+
+
+def test_near_dup_failure_joins_eval_fingerprint_thread(spark, sf_dir, monkeypatch):
+    """When the near-dup stage raises, the overlapped eval-fingerprint
+    thread is done by the time the call has raised, and a checkpoint it
+    materialized is released."""
+    from http_feeds_spark import pipeline as pl
+    from http_feeds_spark.queries import llm
+
+    futures = []
+
+    class RecordingPool(pl.ThreadPoolExecutor):
+        def submit(self, *args, **kwargs):
+            futures.append(super().submit(*args, **kwargs))
+            return futures[-1]
+
+    def _fail(*_args, **_kwargs):
+        raise RuntimeError("injected near-dup failure")
+
+    real_eval_fp_rows = pl._eval_fp_rows
+
+    def _slow_eval_fp_rows(eval_docs):
+        time.sleep(3)  # still running when the near-dup stage raises
+        return real_eval_fp_rows(eval_docs)
+
+    monkeypatch.setattr(pl, "ThreadPoolExecutor", RecordingPool)
+    monkeypatch.setattr(pl, "_eval_fp_rows", _slow_eval_fp_rows)
+    monkeypatch.setattr(llm, "_near_dup_pairs", _fail)
+    docs = _docs(spark, sf_dir)
+    eval_docs = docs.select("doc_id", "text").limit(5)
+    with pytest.raises(RuntimeError, match="injected near-dup failure"):
+        pl.prepare_training_corpus(spark, docs, eval_docs=eval_docs)
+    assert len(futures) == 1 and futures[0].done()
+    if not futures[0].cancelled() and futures[0].exception() is None:
+        rdd = futures[0].result()._jdf.queryExecution().logical().rdd()
+        level = rdd.getStorageLevel()
+        assert not (level.useMemory() or level.useDisk())

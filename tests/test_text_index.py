@@ -240,6 +240,33 @@ def test_compact_postings_is_exact_and_crash_safe(spark, sf_dir, tmp_path):
     assert ti.search(spark, root, TERMS, k=10).count() == 10
 
 
+def test_manifest_generation_ignores_compaction_segments_in_root(
+    spark, sf_dir, tmp_path
+):
+    """A manifest's generation is the name of the directory holding its
+    files, not the first ``/compaction/<n>/`` segment of the path: an
+    index root under ``.../compaction/7/...`` must still map every
+    manifest to its own generation, and compaction must still work."""
+    docs = _docs(spark, sf_dir)
+    thirds = [docs.where(F.col("doc_id") % 3 == i) for i in range(3)]
+    root = str(tmp_path / "compaction" / "7" / "ti")
+    ti.build_text_index(spark, thirds[0], root)
+    ti.upsert_documents(spark, thirds[1], root)
+    ti.upsert_documents(spark, thirds[2], root)
+    before = [tuple(r) for r in ti.search(spark, root, TERMS, k=10).collect()]
+    # an inert manifest (crash before its merged dir landed) stays listed
+    spark.createDataFrame(
+        [(3, [0, 1])], "new_batch int, sources array<int>"
+    ).coalesce(1).write.mode("overwrite").parquet(
+        f"{root}/{ti.COMPACTION_DIR}/000000"
+    )
+    assert ti._manifests(spark, root) == [(0, 3, [0, 1])]
+    assert ti.compact_postings(spark, root, upto=2) == [4]
+    assert [
+        tuple(r) for r in ti.search(spark, root, TERMS, k=10).collect()
+    ] == before
+
+
 def test_compact_postings_switch_is_atomic(spark, sf_dir, tmp_path):
     """Crash window 2: manifest + merged dir committed, but vacuum and
     the derived rewrite never ran. The view must ALREADY be switched —
